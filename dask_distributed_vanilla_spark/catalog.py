@@ -33,8 +33,8 @@ TABLES = (
 TINY_DIMS = ("region", "nation")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy parquet scan for one table of the star schema.
+def normalize_ts(df: DataFrame) -> DataFrame:
+    """Normalize an events frame's `ts` (batch scan or stream).
 
     `events.ts` is parquet TIMESTAMP(NANOS). Depending on the Spark
     build/conf it scans either as int64 nanoseconds (under
@@ -43,15 +43,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     what DuckDB's µs TIMESTAMP sees, and accepted by `unix_micros` /
     time-window functions that reject NTZ).
     """
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # session tz is UTC, so the wall-clock reading is unchanged
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        # session tz is UTC, so the wall-clock reading is unchanged
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Lazy parquet scan for one table of the star schema (`events.ts`
+    normalized by :func:`normalize_ts`)."""
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return normalize_ts(df) if name == "events" else df
 
 
 # spread()'s narrow-scan decision, memoized per (session, analyzed-plan

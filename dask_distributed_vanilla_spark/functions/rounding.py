@@ -23,11 +23,13 @@ and both engines' half-even agrees on their grids (integer codebook
 cells / integer cents, never .xx5 doubles):
 
   - emb_quantize codebook cell assignment
-    (operators/similarity.py:554, oracle twin :603) — the round IS the
-    quantizer; both sides round the same expression so MAE matches.
+    (operators/similarity.py `emb_quantize`, oracle twin
+    `EMB_QUANTIZE_SQL`) — the round IS the quantizer; both sides round
+    the same expression so MAE matches.
   - stream_update_totals integer-cents normalization
-    (streaming/events_stream.py:656) — cents are exact integers; the
-    round removes double noise BEFORE the sum, not after it.
+    (streaming/events_stream.py `stream_update_totals`) — cents are
+    exact integers; the round removes double noise BEFORE the sum, not
+    after it.
 
 A future rounding sweep must leave these two as-is: "fixing" them to
 half-up would change the quantizer/normalizer semantics themselves and

@@ -61,14 +61,14 @@ _DEFAULTS = {
 # is per ROUND, so the saving grows with rounds, not with core count —
 # the same trade holds on a cluster; flip here if a deployment's loop
 # frames are large enough for runtime re-planning to win back.
-ITER_LOOP_AQE = os.environ.get("SPARK_GRAFT_ITER_AQE", "false")
+ITER_LOOP_AQE = "false"
 
 
 @contextmanager
 def scoped_conf(spark: SparkSession, confs: dict[str, str]):
     """Set session confs for the duration of a block, restoring the
-    previous values on exit — the engine's pattern for loop-scoped
-    sizing (streaming's _stream_shuffle generalized)."""
+    previous values on exit — the engine's pattern for loop- and
+    query-scoped sizing (iterative loops, each streaming drain)."""
     old = {k: spark.conf.get(k) for k in confs}
     for k, v in confs.items():
         spark.conf.set(k, v)

@@ -3,11 +3,15 @@ custom stateful sessionization operator."""
 
 from __future__ import annotations
 
+import os
+import tempfile
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from dask_distributed_vanilla_spark.operators.events import e5
+from dask_distributed_vanilla_spark.streaming import events_stream as es
 from dask_distributed_vanilla_spark.streaming.events_stream import events_stream, stream_e1
 from dask_distributed_vanilla_spark.streaming.stateful import sessionize_stream
 from tests.conftest import SF_SMOKE
@@ -27,6 +31,23 @@ def test_stream_e1_equals_batch(spark):
         ).collect()
     }
     assert got == want
+
+
+@pytest.mark.parametrize("name", sorted(es.QUERIES))
+def test_twin_leaves_no_view_or_scratch_dir(spark, name):
+    """The drain contract: a twin runs its stream to completion and
+    returns its result without leaving a temp view or a temp-dir entry
+    behind (a long-running service calls the twins indefinitely)."""
+
+    def snapshot():
+        views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        return views, set(os.listdir(tempfile.gettempdir()))
+
+    views, entries = snapshot()
+    es.QUERIES[name](spark, SF_SMOKE).toPandas()
+    new_views, new_entries = snapshot()
+    assert new_views - views == set()
+    assert new_entries - entries == set()
 
 
 def test_stateful_sessionization(spark):
@@ -236,7 +257,7 @@ def test_watermark_bounds_join_state(spark, tmp_path):
     import time
     import uuid
 
-    from dask_distributed_vanilla_spark.streaming.events_stream import _stream_shuffle
+    from dask_distributed_vanilla_spark.session import scoped_conf
 
     # ten chronological chunks -> ten micro-batches, watermark advancing
     src = str(tmp_path / "chunks")
@@ -274,7 +295,7 @@ def test_watermark_bounds_join_state(spark, tmp_path):
         .withWatermark("purch_ts", "2 hours")
     )
     sink = f"state_bound_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark, 4):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             clicks.join(
                 purchases,
@@ -331,10 +352,8 @@ def test_transform_with_state_totals(spark):
 
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    from dask_distributed_vanilla_spark.streaming.events_stream import (
-        _stream_shuffle,
-        events_stream,
-    )
+    from dask_distributed_vanilla_spark.session import scoped_conf
+    from dask_distributed_vanilla_spark.streaming.events_stream import events_stream
 
     out_schema = StructType(
         [
@@ -344,7 +363,7 @@ def test_transform_with_state_totals(spark):
         ]
     )
     sink = f"tws_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark, 4):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             events_stream(spark, SF_SMOKE)
             .select("user_id", "value")
