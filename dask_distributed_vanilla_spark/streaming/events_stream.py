@@ -323,12 +323,14 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule on both engines."""
     from dask_distributed_vanilla_spark.streaming.stateful import sessionize_stream
 
-    # Unlike the JVM-stateful streams (4 partitions best: state-store
-    # overhead dominates), the Python fold is CPU-bound per partition —
-    # measured at sf0.1: 1→18.1s, 4→6.2s, 16→5.0s, 32→5.2s. Size to
-    # the Arrow-fold parallelism, not the state-store minimum. The
-    # no-data batch fires the timeouts, so it stays.
-    out = _drain(sessionize_stream(events_stream(spark, sf_dir)), "append", shuffle_partitions=16)
+    # Each partition is a Python task per micro-batch. With the
+    # engine's worker daemon (pyworker.py), 4 cores, median of 3:
+    # sf0.01 4→1.29s, 8→1.63s, 16→2.39s, 32→4.14s; sf0.1 4→3.95s,
+    # 8→5.06s, 16→5.28s, 32→6.77s, so 4 as for the JVM-stateful twins.
+    # (16 won at sf0.1, 6.2s vs 5.0s, only while every Python task
+    # paid ~0.1 s of pyspark.zip re-reads.) The no-data batch fires the
+    # timeouts, so it stays.
+    out = _drain(sessionize_stream(events_stream(spark, sf_dir)), "append", shuffle_partitions=4)
     return out.orderBy("user_id", "session_start")
 
 

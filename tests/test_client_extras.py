@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import zipfile
+
 import pytest
 
 from dask_distributed_vanilla_spark.client import Client
@@ -53,6 +55,18 @@ def test_upload_file(client, tmp_path):
     # addPyFile makes it importable on executors
     got = client.run(
         lambda: __import__("uploaded_helper").VALUE + 1, on_executors=True
+    )
+    assert set(got) == {42}
+
+
+def test_upload_zip_reaches_running_workers(client, tmp_path):
+    # the workers already ran tasks above: a zip arriving now must still
+    # be read by their (reused) import machinery
+    with zipfile.ZipFile(tmp_path / "uploaded_zip_helper.zip", "w") as zf:
+        zf.writestr("uploaded_zip_helper.py", "VALUE = 41\n")
+    client.upload_file(str(tmp_path / "uploaded_zip_helper.zip"))
+    got = client.run(
+        lambda: __import__("uploaded_zip_helper").VALUE + 1, on_executors=True
     )
     assert set(got) == {42}
 
