@@ -66,9 +66,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # of on every query build (r13 verdict item 8 / ADVICE — on a real
 # cluster the conversion is driver-side planning work on each build).
 # Bounded in practice: one entry per distinct spread() call-site plan
-# per corpus. Keyed on id(sparkContext) so a restarted session never
-# reuses stale counts.
-_SPREAD_NPARTS: dict[tuple[int, int], int] = {}
+# per corpus. Keyed on the context's applicationId, which a restarted
+# session never shares (an id() can be reused once the old context is
+# collected), so stale counts are never read.
+_SPREAD_NPARTS: dict[tuple[str, int], int] = {}
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -92,7 +93,7 @@ def spread(df: DataFrame) -> DataFrame:
     would move to explicit file-layout inspection."""
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
-    key = (id(spark.sparkContext), df._jdf.queryExecution().analyzed().semanticHash())
+    key = (spark.sparkContext.applicationId, df._jdf.queryExecution().analyzed().semanticHash())
     n = _SPREAD_NPARTS.get(key)
     if n is None:
         n = df.rdd.getNumPartitions()

@@ -12,9 +12,10 @@ against the E1-style oracle.
 Drain contract: each twin drains its stream to completion (availableNow
 trigger) and returns its result, leaving no temp view or scratch dir
 behind. The memory-sink twins all run through `_drain`, which drops the
-sink's temp view before returning; `stream_incremental_mv` materializes
-its view and then deletes its scratch dir. `events_stream` reads the
-fixture file where it is.
+sink's temp view and checkpoint before returning and gives every twin
+the same 4 state-store partitions. `stream_incremental_mv` keeps no
+stream state; it materializes its view and then deletes its scratch dir.
+`events_stream` reads the fixture file where it is.
 
 At scale this is the operator that replaces the reference's pubsub
 analytics: Kafka source instead of file replay, `update` output to a
@@ -49,27 +50,25 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_ts(stream)
 
 
-def _drain(
-    df: DataFrame,
-    mode: str,
-    shuffle_partitions: int | None = None,
-    skip_no_data_batch: bool = False,
-) -> DataFrame:
+def _drain(df: DataFrame, mode: str, skip_no_data_batch: bool = False) -> DataFrame:
     """Run a streaming frame to completion and return what it emitted.
 
     The query drains everything the source holds into a memory sink
     (availableNow trigger, output `mode`) under confs scoped to this
     query alone. The sink's temp view is dropped before returning: the
     returned frame keeps the sink's analyzed plan, so it still collects,
-    and no view outlives the call. (The sink's checkpoint is a Spark
-    temp dir that Spark deletes when the query stops.)
+    and no view outlives the call. The sink's checkpoint is a Spark temp
+    dir, deleted when the query stops, also when it fails.
 
-    `shuffle_partitions`: a stateful stream pays a fixed per-micro-batch
-    cost for EVERY state-store instance (a stream-stream join keeps 4
-    per partition), and the count is pinned by the first checkpoint, so
-    it is sized to the stream's volume up front, not inherited from the
-    batch default. A production Kafka topic is sized to sustained
-    rows/sec per core the same way.
+    Every twin runs with 4 shuffle partitions, so 4 state stores per
+    stateful operator. Each store pays a checksummed commit per
+    micro-batch whatever its data volume, so the cost follows the store
+    count, not the core count: the batch default (32) spends most of a
+    small stream's time committing near-empty stores (stream_e1 and
+    stream_dedup at sf0.01, 4 cores: 3.65 -> 1.84 s and 5.26 -> 1.16 s),
+    and stream_join at sf0.1 took 15.5 s with 32 stores against 3 s
+    with 4 on the 32-core host of BENCH_r02.json. A production Kafka
+    topic is sized to its sustained rows/sec the same way.
 
     `skip_no_data_batch`: availableNow appends one data-free micro-batch
     after the last file batch so the advanced watermark can evict state
@@ -85,9 +84,14 @@ def _drain(
     keeps the batch, since state eviction is the point there.
     """
     spark = df.sparkSession
-    confs = {}
-    if shuffle_partitions is not None:
-        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    # The state-store count is pinned by the query's first checkpoint;
+    # every drain starts from a fresh temp checkpoint, so this count is
+    # read again on each call. Spark keeps a failed query's temp
+    # checkpoint unless forced to delete it.
+    confs = {
+        "spark.sql.shuffle.partitions": "4",
+        "spark.sql.streaming.forceDeleteTempCheckpointLocation": "true",
+    }
     if skip_no_data_batch:
         confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     name = f"drain_{uuid.uuid4().hex}"
@@ -229,14 +233,8 @@ def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     limit — the condition is the scale contract, not a filter. The joined
     pairs land in an append-mode sink; the per-day rollup is a batch agg
     over the sink table."""
-    # 4 state-store partitions (measured at sf0.1: 15.5s -> 3s vs 32);
     # the inner join emits on arrival, so the no-data batch only expires state
-    pairs = _drain(
-        _attribution_pairs(spark, sf_dir, "inner"),
-        "append",
-        shuffle_partitions=4,
-        skip_no_data_batch=True,
-    )
+    pairs = _drain(_attribution_pairs(spark, sf_dir, "inner"), "append", skip_no_data_batch=True)
     return (
         pairs.groupBy(F.date_trunc("day", F.col("click_ts")).alias("day"))
         .agg(
@@ -281,9 +279,8 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sv",
         )
     )
-    # small stateful replay -> 4 state-store partitions; complete mode:
-    # the no-data batch would rewrite an identical table
-    out = _drain(sessions, "complete", shuffle_partitions=4, skip_no_data_batch=True)
+    # complete mode: the no-data batch would rewrite an identical table
+    out = _drain(sessions, "complete", skip_no_data_batch=True)
     return out.orderBy("user_id", "s_start")
 
 
@@ -323,14 +320,8 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule on both engines."""
     from dask_distributed_vanilla_spark.streaming.stateful import sessionize_stream
 
-    # Each partition is a Python task per micro-batch. With the
-    # engine's worker daemon (pyworker.py), 4 cores, median of 3:
-    # sf0.01 4→1.29s, 8→1.63s, 16→2.39s, 32→4.14s; sf0.1 4→3.95s,
-    # 8→5.06s, 16→5.28s, 32→6.77s, so 4 as for the JVM-stateful twins.
-    # (16 won at sf0.1, 6.2s vs 5.0s, only while every Python task
-    # paid ~0.1 s of pyspark.zip re-reads.) The no-data batch fires the
-    # timeouts, so it stays.
-    out = _drain(sessionize_stream(events_stream(spark, sf_dir)), "append", shuffle_partitions=4)
+    # the no-data batch fires the timeouts, so it stays
+    out = _drain(sessionize_stream(events_stream(spark, sf_dir)), "append")
     return out.orderBy("user_id", "session_start")
 
 
@@ -404,6 +395,14 @@ def stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The shards, view and checkpoint live in one scratch dir; the view
     (one row per event_type) is materialized before the dir is deleted.
+
+    Where a warm call's time goes (4 cores, sf0.01, 4.6-5.1 s per call):
+    the four shard writes 1.1-1.2 s; the four foreachBatch folds
+    0.45-0.75 s each, since every fold reads the view and its applied
+    epoch, localCheckpoints the merge and overwrites the view; the
+    stream's own offset/commit logging around them about 1.1 s; the
+    final view read 0.25-0.3 s. No state store is involved, so the
+    drain's one-wave sizing rule does not apply here.
     """
     import tempfile
 
@@ -468,9 +467,8 @@ def stream_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.approx_count_distinct("user_id").alias("approx_users"))
         .select("event_type", F.col("win.start").alias("w"), "approx_users")
     )
-    # small stateful replay -> 4 state-store partitions; complete mode:
-    # the no-data batch would rewrite an identical table
-    out = _drain(windows, "complete", shuffle_partitions=4, skip_no_data_batch=True)
+    # complete mode: the no-data batch would rewrite an identical table
+    out = _drain(windows, "complete", skip_no_data_batch=True)
     return out.orderBy("event_type", "w")
 
 
@@ -497,11 +495,8 @@ def stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state when the replay ends — excluded identically on both engines
     rather than hand-waved.
     """
-    # 4 state-store partitions as in stream_join; the no-data batch
-    # flushes the null-match rows, so it stays
-    pairs = _drain(
-        _attribution_pairs(spark, sf_dir, "left_outer"), "append", shuffle_partitions=4
-    )
+    # the no-data batch flushes the null-match rows, so it stays
+    pairs = _drain(_attribution_pairs(spark, sf_dir, "left_outer"), "append")
     return (
         pairs.where(F.col("click_ts") < F.lit(OUTER_JOIN_CUTOFF).cast("timestamp"))
         .groupBy(F.date_trunc("day", F.col("click_ts")).alias("day"))
@@ -558,12 +553,11 @@ def stream_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("event_type", F.col("dw.start").alias("day"), "n", "sv", "n_hours")
     )
-    # 4 state-store partitions; the no-data batch closes the last days,
-    # so it stays. Append mode withholds the final (unclosed) day per
-    # type; compare the closed-day region — identical cutoff logic on
-    # both engines
+    # The no-data batch closes the last days, so it stays. Append mode
+    # withholds the final (unclosed) day per type; compare the closed-day
+    # region — identical cutoff logic on both engines
     return (
-        _drain(daily, "append", shuffle_partitions=4)
+        _drain(daily, "append")
         .where(F.col("day") < F.lit(OUTER_JOIN_CUTOFF).cast("timestamp"))
         .orderBy("event_type", "day")
     )
@@ -604,13 +598,13 @@ def stream_update_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sv"),
         )
     )
-    # The memory sink appends each update (4 state-store partitions).
+    # The memory sink appends each update.
     # Only the event COUNT is guaranteed monotone across updates; the
     # money sum is not (a refund / negative value would make max(sv)
     # pick an intermediate total), so recover the sv that belongs to the
     # LATEST update via max_by on the count rather than max of the value.
     return (
-        _drain(totals, "update", shuffle_partitions=4)
+        _drain(totals, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),

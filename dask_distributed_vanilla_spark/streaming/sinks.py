@@ -16,6 +16,7 @@ the dependency-free equivalent with the identical retry contract.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -88,19 +89,19 @@ def merge_epoch_into_view(
     ):
         try:
             current = spark.read.parquet(view_path)
+        except AnalysisException as e:
+            # Only a missing view means "first epoch". Any other read
+            # error must not be folded over: overwriting the view with
+            # this batch alone would drop every earlier epoch.
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            merged = batch_df
+        else:
             applied = current.agg(F.max(MV_EPOCH_COL).alias("e")).collect()[0].e
             if applied is not None and batch_id <= applied:
                 return  # epoch replay after failure: already folded in
-            merged = (
-                current.drop(MV_EPOCH_COL)
-                .unionByName(batch_df)
-                .groupBy(*keys)
-                .agg(F.sum("n").alias("n"), F.sum("sv").alias("sv"))
-            )
-        except Exception:  # first epoch: no view yet
-            merged = batch_df.groupBy(*keys).agg(
-                F.sum("n").alias("n"), F.sum("sv").alias("sv")
-            )
+            merged = current.drop(MV_EPOCH_COL).unionByName(batch_df)
+        merged = merged.groupBy(*keys).agg(F.sum("n").alias("n"), F.sum("sv").alias("sv"))
         out = merged.withColumn(MV_EPOCH_COL, F.lit(int(batch_id))).localCheckpoint()
         out.write.mode("overwrite").parquet(view_path)
 

@@ -5,12 +5,17 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import uuid
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
+from dask_distributed_vanilla_spark.catalog import load_table
 from dask_distributed_vanilla_spark.operators.events import e5
+from dask_distributed_vanilla_spark.session import scoped_conf
 from dask_distributed_vanilla_spark.streaming import events_stream as es
 from dask_distributed_vanilla_spark.streaming.events_stream import events_stream, stream_e1
 from dask_distributed_vanilla_spark.streaming.stateful import sessionize_stream
@@ -33,21 +38,92 @@ def test_stream_e1_equals_batch(spark):
     assert got == want
 
 
+class _StateProgress(StreamingQueryListener):
+    """Collects every state operator's partition count until a query ends."""
+
+    def __init__(self):
+        self.partitions = []
+        self.ended = threading.Event()
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        self.partitions += [op.numShufflePartitions for op in event.progress.stateOperators]
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self.ended.set()
+
+
 @pytest.mark.parametrize("name", sorted(es.QUERIES))
 def test_twin_leaves_no_view_or_scratch_dir(spark, name):
     """The drain contract: a twin runs its stream to completion and
     returns its result without leaving a temp view or a temp-dir entry
-    behind (a long-running service calls the twins indefinitely)."""
+    behind (a long-running service calls the twins indefinitely). Every
+    state operator runs with `_drain`'s 4 partitions, and the session's
+    batch setting is left as it was."""
 
     def snapshot():
         views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
         return views, set(os.listdir(tempfile.gettempdir()))
 
     views, entries = snapshot()
-    es.QUERIES[name](spark, SF_SMOKE).toPandas()
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    progress = _StateProgress()
+    spark.streams.addListener(progress)
+    try:
+        es.QUERIES[name](spark, SF_SMOKE).toPandas()
+        assert progress.ended.wait(60), "no QueryTerminatedEvent"
+    finally:
+        spark.streams.removeListener(progress)
     new_views, new_entries = snapshot()
     assert new_views - views == set()
     assert new_entries - entries == set()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    # stream_incremental_mv folds its view in foreachBatch and keeps no stream state
+    if name != "stream_incremental_mv":
+        assert progress.partitions, f"{name} reported no state operator"
+        assert set(progress.partitions) == {4}
+
+
+def test_drain_failure_restores_confs_and_drops_view(spark):
+    """A query that fails mid-stream: `_drain` raises, every conf it
+    scoped is back to its prior value, and neither the sink view nor the
+    query's temp checkpoint dir is left."""
+    poisoned = load_table(spark, SF_SMOKE, "events").agg(F.min("event_id")).first()[0]
+
+    @F.udf("double")
+    def poison(event_id, value):
+        if event_id == poisoned:
+            raise ValueError("poisoned row")
+        return value
+
+    totals = (
+        events_stream(spark, SF_SMOKE)
+        .withColumn("value", poison("event_id", "value"))
+        .groupBy("event_type")
+        .agg(F.sum("value").alias("sv"))
+    )
+    prior = {
+        "spark.sql.shuffle.partitions": "5",
+        "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+        "spark.sql.streaming.forceDeleteTempCheckpointLocation": "false",
+    }
+    jvm_tmp = spark._jvm.java.lang.System.getProperty("java.io.tmpdir")
+
+    def checkpoints():
+        return {e for e in os.listdir(jvm_tmp) if e.startswith("temporary-")}
+
+    existing = checkpoints()
+    with scoped_conf(spark, prior):
+        with pytest.raises(StreamingQueryException, match="poisoned row"):
+            es._drain(totals, "complete", skip_no_data_batch=True)
+        assert {k: spark.conf.get(k) for k in prior} == prior
+    assert [t.name for t in spark.catalog.listTables() if t.name.startswith("drain_")] == []
+    assert checkpoints() - existing == set()
 
 
 def test_stateful_sessionization(spark):
@@ -174,6 +250,22 @@ def test_incremental_view_epoch_replay_is_noop(spark, tmp_path):
     merge_epoch_into_view(b1, 0, view, ["k"])  # stale epoch: also a no-op
     got = {r.k: (r.n, r.sv) for r in spark.read.parquet(view).collect()}
     assert got == {"a": (3, 11.0), "b": (1, 5.0)}
+
+
+def test_incremental_view_fold_raises_on_unreadable_view(spark, tmp_path):
+    """Only a missing view starts a fresh one: a view that exists but
+    cannot be read makes the fold raise and is left as it was (folding
+    the batch alone over it would drop every earlier epoch)."""
+    from dask_distributed_vanilla_spark.streaming.sinks import merge_epoch_into_view
+
+    view = tmp_path / "mv"
+    b = spark.createDataFrame([("a", 2, 10.0)], "k string, n long, sv double")
+    merge_epoch_into_view(b, 0, str(view), ["k"])
+    (view / "part-corrupt.parquet").write_bytes(b"not a parquet file")
+    before = {p.name: p.read_bytes() for p in view.iterdir()}
+    with pytest.raises(Exception, match="part-corrupt.parquet"):
+        merge_epoch_into_view(b, 1, str(view), ["k"])
+    assert {p.name: p.read_bytes() for p in view.iterdir()} == before
 
 
 def test_checkpoint_restart_processes_only_new_files(spark, tmp_path):
